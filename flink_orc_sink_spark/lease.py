@@ -18,27 +18,11 @@ sink) are excluded by design: their writes are idempotent per
 ``batch_id`` partition and have no read-modify-write cycle for a
 second writer to corrupt.
 
-Primitive: ``FileSystem.create(path, overwrite=False)`` — atomic
-create-if-absent (the same family as the replay-horizon ``mkdirs``
-markers, but exclusive). The lease is a single file
-``<state_path>/_lease`` whose content names the holder.
-
-Atomicity scope (be honest about the primitive, per filesystem):
-
-- **HDFS**: ``create(overwrite=False)`` is namenode-arbitrated —
-  truly atomic, used as-is.
-- **Local** (``file://``): Hadoop's ``LocalFileSystem`` decomposes
-  the exclusive create into exists-then-create, so the lease write
-  drops to POSIX ``O_CREAT|O_EXCL`` instead — kernel-arbitrated,
-  truly atomic, proven by the cross-process barrier-race pytest.
-- **Object stores (S3A etc.)**: no atomic create at this API level.
-  Acquisition RE-READS the lease content after the create and
-  yields unless its own owner name won (last-write-wins); that
-  narrows the race window to the read-back instant but cannot close
-  it — deploying there, prefer a natively conditional primitive
-  (S3 conditional PUT ``If-None-Match``, or DynamoDB-based locking
-  as S3A committers use) and keep ``ttl_sec`` generously above the
-  clock skew.
+Primitive: ``commit.create_if_absent`` — atomic create-if-absent (the
+same family as the replay-horizon ``mkdirs`` markers, but exclusive).
+The lease is a single file ``<state_path>/_lease`` whose content names
+the holder. How atomic that create is on each filesystem is set out in
+``commit.py``, the one module that branches on the scheme.
 
 The rename-based steal and release paths are single-winner on every
 Hadoop filesystem (rename is atomic on HDFS and local, and fails for
@@ -94,6 +78,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from flink_orc_sink_spark.commit import (
+    CommitConflictError,
+    create_if_absent,
+    read_text as _read_lease,
+)
 from flink_orc_sink_spark.session import hadoop_fs
 
 LEASE_NAME = "_lease"
@@ -139,43 +128,6 @@ def process_owner(kind: str) -> str:
         f"{kind}:{socket.gethostname()}:{os.getpid()}:"
         f"{uuid.uuid4().hex[:8]}"
     )
-
-
-def _read_lease(spark: SparkSession, path: str) -> str:
-    fs, p = hadoop_fs(spark, path)
-    ins = fs.open(p)
-    try:
-        return str(
-            spark._jvm.org.apache.commons.io.IOUtils.toString(
-                ins, "UTF-8"
-            )
-        )
-    finally:
-        ins.close()
-
-
-def _write_lease(fs, p, owner: str) -> None:
-    if fs.getScheme() == "file":
-        # POSIX O_CREAT|O_EXCL — the one TRULY atomic create-if-absent
-        # the local filesystem offers. Hadoop's LocalFileSystem
-        # decomposes create(overwrite=False) into exists-then-create,
-        # so two same-instant racers could both pass it; the kernel
-        # arbitrates O_EXCL. (No .crc side file is written; the
-        # ChecksumFileSystem reads a crc-less file without verifying,
-        # and its own rename/delete keep any later crc in sync.)
-        local = p.toUri().getPath()
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, owner.encode("utf-8"))
-        finally:
-            os.close(fd)
-        return
-    out = fs.create(p, False)
-    try:
-        out.write(bytearray(owner.encode("utf-8")))
-    finally:
-        out.close()
 
 
 def _try_acquire(
@@ -225,32 +177,14 @@ def _try_acquire(
                 # checkpoint-derived owners): refresh in place
                 fs.delete(p, False)
         try:
-            _write_lease(fs, p, owner)
-        except Exception as exc:
+            create_if_absent(spark, lease, owner.encode("utf-8"))
+        except CommitConflictError as exc:
             if attempt == 0:
                 continue  # racer created between our probe and create
             raise LeaseHeldError(
                 f"state dir {state_path!r}: lease create lost a race "
                 f"twice — a concurrent writer is active ({exc})"
             ) from None
-        # Read-back verification (see module docstring): on stores
-        # where create(overwrite=False) is exists-then-create, two
-        # racers can both pass the create — whoever's content landed
-        # last owns the file; the other yields here instead of both
-        # proceeding. Skipped where the create is already atomic
-        # (local O_EXCL, HDFS namenode-arbitrated) — the verify read
-        # would be a wasted round trip per micro-batch.
-        if fs.getScheme() not in ("file", "hdfs"):
-            try:
-                winner = _read_lease(spark, lease)
-            except Exception:
-                winner = None  # released/stolen instantly
-            if winner is not None and winner != owner:
-                raise LeaseHeldError(
-                    f"state dir {state_path!r}: lease create raced "
-                    f"with {winner!r} and lost the write — refusing "
-                    f"to run {owner!r} concurrently"
-                )
         return
     raise AssertionError("unreachable")
 

@@ -40,17 +40,17 @@ step is still CRASH-SAFE (a killed job, not a concurrent one):
   at the end — a forget that lands mid-compaction survives into the
   next cycle instead of being silently dropped;
 - each table is fully rewritten to ``<subdir>__compacting`` first and
-  only then swapped in (write-pending-then-rename, the reference
-  sink's protocol). A crash leaves either the old table intact or a
-  complete new copy recoverable by :func:`recover_index`; re-running
-  compaction heals and resumes;
+  only then swapped in by ``commit.swap_dir`` (write-pending-then-
+  rename, the reference sink's protocol). A crash leaves either the
+  old table intact or a complete new copy recoverable by
+  :func:`recover_index`; re-running compaction heals and resumes;
 - a compaction that would leave a table EMPTY (every row tombstoned)
   aborts the swap and keeps serving merge-on-read — a zero-row
   partitioned parquet write has no readable footer, so swapping it in
   would brick the index. The tombstones simply stay until new rows
   are appended;
-- the tombstone rewrite in :func:`readmit_ids` uses the same
-  pending-then-rename swap, healed on the next read.
+- the tombstone rewrite in :func:`readmit_ids` uses the same swap,
+  healed on the next read.
 """
 
 from __future__ import annotations
@@ -60,10 +60,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_orc_sink_spark.session import (
-    fs_exists as _exists,
-    hadoop_fs as _fs,
-)
+from flink_orc_sink_spark import commit
 
 _TOMBSTONES = "tombstones"
 _PENDING_SUFFIX = "__compacting"
@@ -99,25 +96,14 @@ IVF_TABLES = (IndexTable("data", "cid", ("cell",), (), ("cell",)),)
 AHASH_TABLES = (IndexTable("bands", "mid", ("band",), ("band", "key")),)
 
 
-# _fs/_exists are the shared session-level Hadoop-FS helpers (one
-# definition for sinks + retention — round-6 verdict #5), imported
-# above under their historical local names.
-
-
 def _data_files(spark: SparkSession, path: str) -> list[str]:
-    """Recursive list of the parquet DATA files under ``path`` (part
-    files only — markers like _SUCCESS don't count). Empty when the
-    directory is missing or holds no data."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next().getPath()
-        if f.getName().startswith("part-"):
-            out.append(f.toString())
-    return out
+    """The parquet part files under ``path`` (markers like _SUCCESS
+    don't count); empty when it is missing or holds no data."""
+    return [
+        f"{path}/{rel}"
+        for rel, _ in commit.list_files(spark, path)
+        if rel.rpartition("/")[2].startswith("part-")
+    ]
 
 
 def _anti(df: DataFrame, ts: DataFrame, id_col: str) -> DataFrame:
@@ -172,18 +158,6 @@ def forget_ids(
     )
 
 
-def _recover_tombstones(spark: SparkSession, index_path: str) -> None:
-    """Heal a crashed :func:`readmit_ids` swap: a complete rewrite
-    pending with no live table is renamed into place. No-op otherwise."""
-    live = f"{index_path}/{_TOMBSTONES}"
-    pending = live + _REWRITE_SUFFIX
-    if _exists(spark, pending) and not _exists(spark, live):
-        fs, live_p = _fs(spark, live)
-        _, pend_p = _fs(spark, pending)
-        if not fs.rename(pend_p, live_p):
-            raise IOError(f"tombstone recovery rename failed: {pending}")
-
-
 def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
     """The tombstone set, or None when nothing is currently forgotten
     (the common case — probes skip the anti-join entirely). May hold
@@ -191,8 +165,9 @@ def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
     the readmit rewrite) is duplicate-insensitive, and skipping the
     distinct keeps the scan's size stats visible so the probe-side
     anti-join stays a broadcast, not an index-wide shuffle."""
-    _recover_tombstones(spark, index_path)
-    files = _data_files(spark, f"{index_path}/{_TOMBSTONES}")
+    live = f"{index_path}/{_TOMBSTONES}"
+    commit.recover_swap(spark, live, live + _REWRITE_SUFFIX)
+    files = _data_files(spark, live)
     if not files:
         return None
     return spark.read.parquet(*files).select("id")
@@ -248,36 +223,27 @@ def readmit_ids(
     live = f"{index_path}/{_TOMBSTONES}"
     pending = live + _REWRITE_SUFFIX
     remaining = ts.join(rid, "id", "left_anti")
-    fs, live_p = _fs(spark, live)
     if remaining.isEmpty():
         # nothing remains forgotten: drop the table entirely rather
         # than writing a zero-row copy (probes treat absent as "no
         # tombstones" and skip the anti-join)
-        fs.delete(live_p, True)
+        commit.delete(spark, live)
         return
     remaining.write.mode("overwrite").parquet(pending)
-    _, pend_p = _fs(spark, pending)
-    fs.delete(live_p, True)
-    if not fs.rename(pend_p, live_p):
-        raise IOError(f"tombstone rewrite swap failed: {pending}")
+    commit.swap_dir(spark, live, pending)
 
 
 def recover_index(
     spark: SparkSession, index_path: str, tables: tuple[IndexTable, ...]
 ) -> None:
-    """Finish an interrupted compaction swap: a crash between delete
-    and rename leaves a complete ``__compacting`` copy and no live
-    table — rename it into place. Safe to call any time (no-op unless
-    exactly that state is found); :func:`compact_index` calls it
+    """Finish an interrupted compaction swap: a crash mid-swap leaves a
+    complete ``__compacting`` copy and no live table, which
+    ``commit.recover_swap`` renames into place. Safe to call any time
+    (a no-op in every other state); :func:`compact_index` calls it
     first, so simply re-running compaction heals a crashed one."""
     for t in tables:
         live = f"{index_path}/{t.subdir}"
-        pending = live + _PENDING_SUFFIX
-        if _exists(spark, pending) and not _exists(spark, live):
-            fs, live_p = _fs(spark, live)
-            _, pend_p = _fs(spark, pending)
-            if not fs.rename(pend_p, live_p):
-                raise IOError(f"recovery rename failed: {pending}")
+        commit.recover_swap(spark, live, live + _PENDING_SUFFIX)
 
 
 def compact_index(
@@ -310,12 +276,13 @@ def compact_index(
         ):
             return compact_index(spark, index_path, tables, lease=False)
     recover_index(spark, index_path, tables)
-    _recover_tombstones(spark, index_path)
+    ts_dir = f"{index_path}/{_TOMBSTONES}"
+    commit.recover_swap(spark, ts_dir, ts_dir + _REWRITE_SUFFIX)
     # snapshot: the tombstone files applied to EVERY table below, and
     # the only ones deleted at the end — a forget_ids landing while
     # compaction runs stays pending for the next cycle instead of
     # being applied to some tables and then dropped.
-    snapshot = _data_files(spark, f"{index_path}/{_TOMBSTONES}")
+    snapshot = _data_files(spark, ts_dir)
     if not snapshot:
         return
     ts = spark.read.parquet(*snapshot).select("id")
@@ -341,8 +308,7 @@ def compact_index(
             # swap and keep serving merge-on-read (probes stay
             # correct; tombstones stay until rows are appended).
             for _, p in pending + [(live, out)]:
-                fs, pp = _fs(spark, p)
-                fs.delete(pp, True)
+                commit.delete(spark, p)
             return
         pending.append((live, out))
     # every new copy is complete on disk — now swap. A crash mid-loop
@@ -350,18 +316,8 @@ def compact_index(
     # present, rerun compacts again) or new (recover_index finishes
     # the rename); probes see a consistent table either way.
     for live, out in pending:
-        fs, live_p = _fs(spark, live)
-        _, out_p = _fs(spark, out)
-        fs.delete(live_p, True)
-        if not fs.rename(out_p, live_p):
-            raise IOError(f"compaction swap failed: {out} -> {live}")
-    fs, _ = _fs(spark, index_path)
+        commit.swap_dir(spark, live, out)
     for f in snapshot:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
-    if not _data_files(spark, f"{index_path}/{_TOMBSTONES}"):
-        fs.delete(
-            spark._jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/{_TOMBSTONES}"
-            ),
-            True,
-        )
+        commit.delete(spark, f)
+    if not _data_files(spark, ts_dir):
+        commit.delete(spark, ts_dir)

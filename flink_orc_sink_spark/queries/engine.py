@@ -221,15 +221,15 @@ def orc_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as 64 fragment files (what a streaming sink leaves behind
     — one file per task per epoch), then compacted to ~target-size
     files with ``sources/orc_sink.py::compact_orc`` (size-derived file
-    count, atomic directory swap), then read back. The oracle is
+    count, crash-safe directory swap), then read back. The oracle is
     ``SELECT * FROM events``: a value-hash match proves the
     maintenance job is loss-free and dup-free, and the query itself
     asserts the file count actually shrank — the property that keeps
     a 100 TB streaming table readable (NameNode/manifest pressure and
     per-file open cost scale with file count, not bytes)."""
-    import glob
     import shutil
 
+    from flink_orc_sink_spark.commit import list_files
     from flink_orc_sink_spark.sources.orc_sink import compact_orc
 
     e = table(spark, sf_dir, "events")
@@ -241,17 +241,8 @@ def orc_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.repartition(64).write.format("orc").option(
         "compression", "zstd"
     ).save(out)
-
-    def data_files(p):
-        return [
-            f
-            for f in glob.glob(os.path.join(p, "*.orc"))
-            if not os.path.basename(f).startswith(("_", "."))
-        ]
-
-    before = len(data_files(out))
-    compact_orc(spark, out, target_file_mb=256)
-    after = len(data_files(out))
+    before = len(list_files(spark, out))
+    after = compact_orc(spark, out, target_file_mb=256)
     if after >= before:
         raise ValueError(
             f"compaction did not reduce file count: {before} -> {after}"
@@ -2897,7 +2888,7 @@ def pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python DataSource WRITER API and pushed through the value gate:
     events written via ``format("manifest_orc_py")`` (executor tasks
     write pyarrow-ORC files to ``data/``; the driver's ``commit``
-    publishes them in an atomically-renamed manifest — the
+    publishes them in a no-clobber versioned manifest — the
     pending→committed lifecycle of ``RowOrcBucketingSink.java:153-177``
     spoken through the official connector hooks, see
     ``sources/pyds_sink.py``), an ORPHAN file planted in ``data/``

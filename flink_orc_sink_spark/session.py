@@ -168,20 +168,22 @@ def fs_dir_size(spark: SparkSession, path: str) -> int:
     return int(fs.getContentSummary(p).getLength())
 
 
-def _any_data_file(statuses, suffix: str) -> bool:
-    for st in statuses:
-        name = st.getPath().getName()
-        if name.endswith(suffix) and not name.startswith(("_", ".")):
-            return True
-    return False
+def hidden_name(name: str) -> bool:
+    """Spark's file-index rule for names that are not table data:
+    ``.``-prefixed (checksums, in-flight ``.spark-staging-*`` dirs) and
+    ``_``-prefixed unless a ``k=v`` partition dir (``_SUCCESS``,
+    ``_temporary``, ``_spark_metadata``)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 def orc_data_files_exist(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` holds at least one ORC data file. A
-    directory that exists but contains only ``_SUCCESS`` (an
-    all-empty write — e.g. a first micro-batch of pure tombstones)
-    must read as ABSENT: ``spark.read.orc`` on it throws an
-    unable-to-infer-schema AnalysisException.
+    """True when ``path`` holds at least one COMMITTED ORC data file —
+    the files ``spark.read.orc(path)`` would read. A directory holding
+    only ``_SUCCESS``, or only an in-flight dynamic-overwrite
+    ``.spark-staging-*`` dir, must read as ABSENT: ``spark.read.orc``
+    on it throws an unable-to-infer-schema AnalysisException. So a
+    file counts only when no component of its path below ``path`` is
+    :func:`hidden_name`.
 
     Probe cost is BOUNDED (round-6 advisory; datapoints in
     ``tools/scale_probe_retract_join.py``): the lazy recursive
@@ -199,13 +201,23 @@ def orc_data_files_exist(spark: SparkSession, path: str) -> bool:
     fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return False
+    base = fs.makeQualified(p).toString().rstrip("/") + "/"
+
+    def committed(status) -> bool:
+        full = status.getPath().toString()
+        parts = full[len(base):].split("/") if full.startswith(base) else [
+            status.getPath().getName()
+        ]
+        return parts[-1].endswith(".orc") and not any(
+            hidden_name(n) for n in parts
+        )
+
     it = fs.listFiles(p, True)
     seen = 0
     while it.hasNext():
         if seen >= 64:
             break
-        name = it.next().getPath().getName()
-        if name.endswith(".orc") and not name.startswith(("_", ".")):
+        if committed(it.next()):
             return True
         seen += 1
     else:
@@ -218,12 +230,11 @@ def orc_data_files_exist(spark: SparkSession, path: str) -> bool:
         pat = spark._jvm.org.apache.hadoop.fs.Path(
             esc + "/*" * depth + "/*.orc"
         )
-        if _any_data_file(fs.globStatus(pat) or [], ".orc"):
+        if any(committed(st) for st in fs.globStatus(pat) or []):
             return True
     it = fs.listFiles(p, True)  # >2-deep layout fallback
     while it.hasNext():
-        name = it.next().getPath().getName()
-        if name.endswith(".orc") and not name.startswith(("_", ".")):
+        if committed(it.next()):
             return True
     return False
 

@@ -19,8 +19,10 @@ What the reference hand-rolls and Spark provides natively:
   ``part-{task}-{uuid}`` names plus a commit protocol; no probe loop.
 - Rename-based two-phase commit aligned to checkpoints
   (``RowOrcBucketingSink.java:153-213``) → for batch writes, the file
-  output committer publishes files only on job success; for streaming
-  see ``flink_orc_sink_spark.streaming.orc_sink``.
+  output committer publishes files only on job success; what this
+  module publishes itself (snapshot manifests, the compaction swap)
+  goes through ``flink_orc_sink_spark.commit``; for streaming see
+  ``flink_orc_sink_spark.streaming.orc_sink``.
 
 Scale notes: dynamic-partition writes shuffle-free by default (each
 task writes every partition it sees). For very high-cardinality
@@ -31,9 +33,13 @@ files, which is what a 100 TB table wants.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from flink_orc_sink_spark import commit
 
 
 def write_orc(
@@ -159,26 +165,22 @@ def compact_orc(
     at a 30 s cadence that is ~2900 files/day/task, and a 100 TB
     table dies by small files long before it dies by bytes).
 
-    Strategy: size the output file count from the input bytes, rewrite
-    via ``repartition`` (even-sized round-robin when no partition
-    columns; hash on the partition columns otherwise so each output
-    task writes one directory), then atomically swap directories.
-    Returns the number of files after compaction.
+    Strategy: size the output file count from the input bytes (one
+    ``getContentSummary``), rewrite via ``repartition`` (round-robin,
+    or hashed on the partition columns so each task writes one
+    directory) into a pending copy, then ``commit.swap_dir`` it in;
+    the next call first heals a crashed swap. Returns the number of
+    files after compaction.
 
     The reference has no compactor — its sink leans on the checkpoint
     interval to bound file count (``README.md:30``); a real warehouse
     needs this stage regardless of sink.
     """
-    import glob
-    import os
-    import shutil
+    from flink_orc_sink_spark.session import fs_dir_size
 
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    ]
-    total_bytes = sum(os.path.getsize(f) for f in files)
+    pending = path.rstrip("/") + ".__compacting__"
+    commit.recover_swap(spark, path, pending)
+    total_bytes = fs_dir_size(spark, path)
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
 
     df = spark.read.orc(path)
@@ -187,26 +189,14 @@ def compact_orc(
     else:
         df = df.repartition(n_files)
 
-    tmp = path.rstrip("/") + ".__compacting__"
     writer = df.write.mode("overwrite").format("orc").option(
         "compression", compression
     )
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.save(tmp)
-
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(
-        [
-            f
-            for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(f)
-            and not os.path.basename(f).startswith(("_", "."))
-        ]
-    )
+    writer.save(pending)
+    commit.swap_dir(spark, path, pending)
+    return len(commit.list_files(spark, path))
 
 
 def write_orc_bucketed(
@@ -388,9 +378,7 @@ def pruned_read(
 
 
 def _versions_dir(base_path: str) -> str:
-    import os
-
-    return os.path.join(base_path, "_versions")
+    return base_path.rstrip("/") + "/_versions"
 
 
 def snapshot_versions(base_path: str) -> list[int]:
@@ -398,13 +386,7 @@ def snapshot_versions(base_path: str) -> list[int]:
     ascending. A version exists iff its manifest file does — data
     files alone are invisible (same visibility rule as the streaming
     sink's ``_spark_metadata`` and the reference's rename-commit)."""
-    import glob
-    import os
-
-    return sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(os.path.join(_versions_dir(base_path), "v*.json"))
-    )
+    return commit.versions(None, _versions_dir(base_path))
 
 
 def snapshot_write(
@@ -423,12 +405,13 @@ def snapshot_write(
       at that version; ``mode="append"`` carries the parent's list
       forward, ``mode="overwrite"`` starts fresh — either way old
       versions stay readable;
-    - the manifest is published with write-temp-then-``os.replace``
-      (atomic on POSIX): readers see either the old snapshot or the
-      new one, never a partial file list — crash mid-write leaves
-      orphan data files that no manifest references (invisible, GC-able),
-      the exact failure contract of the reference's pending→committed
-      rename and our streaming sink.
+    - the manifest is published by ``commit.commit_next``, never over
+      an existing version: a writer that loses the race re-reads the
+      winner's snapshot and takes the next number, so concurrent
+      appends keep each other's files. Readers see the old snapshot
+      or the new one; a crash leaves only unreferenced (invisible,
+      GC-able) data files — the failure contract of the reference's
+      pending→committed rename.
 
     At 100 TB the manifest IS the file listing — readers never
     ``ls`` the data tree (object-store listing is slow and eventually
@@ -436,39 +419,31 @@ def snapshot_write(
     manifest swaps many small files for few big ones. Returns the new
     version number.
     """
-    import json
-    import os
     import uuid
 
-    os.makedirs(_versions_dir(base_path), exist_ok=True)
-    prior = snapshot_versions(base_path)
-    version = (prior[-1] + 1) if prior else 1
-    stage = os.path.join(base_path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"unknown snapshot mode: {mode}")
+    spark = df.sparkSession
+    vdir = _versions_dir(base_path)
+    prior = commit.versions(spark, vdir)
+    stage = f"data/v{(prior[-1] if prior else 0) + 1}-{uuid.uuid4().hex[:8]}"
+    stage_path = os.path.join(base_path, stage)
     df.write.mode("error").format("orc").option(
         "compression", compression
-    ).save(stage)
+    ).save(stage_path)
     new_files = sorted(
-        os.path.relpath(os.path.join(root, f), base_path)
-        for root, _, files in os.walk(stage)
-        for f in files
-        if f.endswith(".orc") and not f.startswith(("_", "."))
+        f"{stage}/{rel}"
+        for rel, _ in commit.list_files(spark, stage_path)
+        if rel.endswith(".orc")
     )
-    files = list(new_files)
-    if mode == "append" and prior:
-        with open(
-            os.path.join(_versions_dir(base_path), f"v{prior[-1]:08d}.json")
-        ) as fh:
-            files = json.load(fh)["files"] + files
-    elif mode not in ("append", "overwrite"):
-        raise ValueError(f"unknown snapshot mode: {mode}")
-    manifest = {"version": version, "mode": mode, "files": files}
-    tmp = os.path.join(_versions_dir(base_path), f".v{version:08d}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(
-        tmp, os.path.join(_versions_dir(base_path), f"v{version:08d}.json")
-    )
-    return version
+
+    def build(parent: int | None) -> dict:
+        files = new_files
+        if mode == "append" and parent is not None:
+            files = commit.read_manifest(spark, vdir, parent)["files"] + files
+        return {"version": (parent or 0) + 1, "mode": mode, "files": files}
+
+    return commit.commit_next(spark, vdir, build)
 
 
 def snapshot_read(
@@ -479,17 +454,13 @@ def snapshot_read(
     writes and files belonging to later versions are invisible.
     Filters/column pruning push into the ORC scan as usual (the
     manifest only fixes the file list)."""
-    import json
-    import os
-
-    versions = snapshot_versions(base_path)
+    versions = commit.versions(spark, _versions_dir(base_path))
     if not versions:
         raise FileNotFoundError(f"no snapshots at {base_path}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise ValueError(f"version {v} not in {versions}")
-    with open(os.path.join(_versions_dir(base_path), f"v{v:08d}.json")) as fh:
-        files = json.load(fh)["files"]
+    files = commit.read_manifest(spark, _versions_dir(base_path), v)["files"]
     return spark.read.format("orc").load(
         [os.path.join(base_path, f) for f in files]
     )
@@ -525,16 +496,10 @@ def snapshot_diff(
 
     The join shuffles only the pruned sides, hashed on the key; the
     null-safe struct comparison happens entirely JVM-side."""
-    import json
-    import os
-
-    def _files(v: int) -> list[str]:
-        with open(
-            os.path.join(_versions_dir(base_path), f"v{v:08d}.json")
-        ) as fh:
-            return json.load(fh)["files"]
-
-    fa, fb = _files(from_version), _files(to_version)
+    fa, fb = (
+        commit.read_manifest(spark, _versions_dir(base_path), v)["files"]
+        for v in (from_version, to_version)
+    )
     sa, sb = set(fa), set(fb)
     a_only = [f for f in fa if f not in sb]
     b_only = [f for f in fb if f not in sa]
@@ -582,8 +547,8 @@ def snapshot_expire(
     reference's abandon-on-recovery contract,
     ``RowOrcBucketingSink.java:165-168`` / ``README.md:19-22``).
 
-    Deletion order is crash-safe: manifests are removed FIRST (atomic
-    unlink each), so a crash mid-GC leaves unreferenced-but-present
+    Deletion order is crash-safe: manifests are removed FIRST (one
+    delete each), so a crash mid-GC leaves unreferenced-but-present
     data files — invisible to readers, collected by the next expire.
     The reverse order could leave a live manifest naming deleted
     files. At 100 TB this runs as a metadata-only driver job (the
@@ -591,35 +556,28 @@ def snapshot_expire(
     store. Returns counts: versions_expired, files_deleted,
     files_retained.
     """
-    import json
-    import os
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = snapshot_versions(base_path)
+    vdir = _versions_dir(base_path)
+    versions = commit.versions(None, vdir)
     expired = versions[:-keep_last]
     kept = versions[-keep_last:]
     for v in expired:
-        os.unlink(os.path.join(_versions_dir(base_path), f"v{v:08d}.json"))
+        commit.delete(None, commit.manifest_path(vdir, v))
     live: set[str] = set()
     for v in kept:
-        with open(
-            os.path.join(_versions_dir(base_path), f"v{v:08d}.json")
-        ) as fh:
-            live.update(json.load(fh)["files"])
-    deleted = 0
+        live.update(commit.read_manifest(None, vdir, v)["files"])
     data_root = os.path.join(base_path, "data")
-    for root, _, files in os.walk(data_root):
-        for f in files:
-            full = os.path.join(root, f)
-            if os.path.relpath(full, base_path) not in live and f.endswith(
-                ".orc"
-            ):
-                os.unlink(full)
-                deleted += 1
+    dead = [
+        f"data/{rel}"
+        for rel, _ in commit.list_files(None, data_root)
+        if rel.endswith(".orc") and f"data/{rel}" not in live
+    ]
+    for rel in dead:
+        commit.delete(None, os.path.join(base_path, rel))
     return {
         "versions_expired": len(expired),
-        "files_deleted": deleted,
+        "files_deleted": len(dead),
         "files_retained": len(live),
     }
 

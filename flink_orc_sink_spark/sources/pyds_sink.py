@@ -12,9 +12,12 @@ this module re-expresses the protocol on it:
   batches into ONE ORC file each under ``data/`` — written via
   pyarrow, invisible to readers (the directory is never listed);
 - the driver's ``commit(messages)`` is ``notifyCheckpointComplete``:
-  it publishes the task files in a JSON manifest via
-  write-temp-then-``os.replace`` (atomic on POSIX) — readers see the
-  whole batch of files or none of it;
+  it publishes the task files as the next manifest version through
+  ``flink_orc_sink_spark.commit``, never over an existing one (a
+  writer that loses the race takes the next number) — readers see the
+  whole batch of files or none of it. An overwrite is a version marked
+  ``"overwrite"`` that readers start from, so older manifests vanish
+  from view before they are deleted;
 - ``abort(messages)`` is the reference's pending-file cleanup: the
   named files are unlinked; a crash that skips even abort leaves
   orphans that no manifest references — invisible, GC-able;
@@ -26,8 +29,8 @@ this module re-expresses the protocol on it:
   the official connector API.
 
 ``read_manifest_orc`` is the reader side of the contract: it unions
-the manifested file lists and reads ONLY those (an orphan planted in
-``data/`` must not surface — pytest-probed), exactly like
+the visible manifests' file lists and reads ONLY those (an orphan
+planted in ``data/`` must not surface — pytest-probed), exactly like
 ``read_committed_orc`` trusts ``_spark_metadata``.
 
 Scale: one ORC file per writer task (size it upstream via
@@ -37,9 +40,7 @@ shape the engine's snapshot tables use at any corpus size.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import time
 import uuid
 from dataclasses import dataclass
@@ -51,16 +52,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-
-# The only names the sink ever publishes: vNNNNNNNN.json from batch
-# commits, batch-NNNNNNNN.json from streaming epochs — 8+ digits
-# ({8,}, not {8}: the :08d format is a MINIMUM width, so version or
-# batch id 10^8 widens to 9 digits and an exact-width match would
-# silently orphan its committed files). Readers and the vacuum filter
-# on this so a stray foreign .json in manifests/ can neither KeyError
-# a read nor pin phantom files as live.
-_BATCH_MANIFEST_NAME = re.compile(r"v(\d{8,})\.json")
-_MANIFEST_NAME = re.compile(r"(v|batch-)\d{8,}\.json")
+from flink_orc_sink_spark import commit
 
 
 @dataclass
@@ -117,22 +109,14 @@ def _write_task_file(path: str, iterator) -> FileCommit:
     return FileCommit(rel, n_rows)
 
 
-def _publish(path: str, manifest_name: str, files: list[str]) -> None:
-    mdir = os.path.join(path, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".{manifest_name}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"files": files}, fh)
-    os.replace(tmp, os.path.join(mdir, manifest_name))
-
-
 def _abort(path: str, messages) -> None:
     for m in messages:
         if m is not None and m.relpath:
-            try:
-                os.unlink(os.path.join(path, m.relpath))
-            except OSError:
-                pass
+            commit.delete(None, os.path.join(path, m.relpath))
+
+
+def _manifests(path: str) -> str:
+    return os.path.join(path, "manifests")
 
 
 class _BatchWriter(DataSourceArrowWriter):
@@ -144,42 +128,17 @@ class _BatchWriter(DataSourceArrowWriter):
         return _write_task_file(self.path, iterator)
 
     def commit(self, messages):
+        # runs in a Python worker with no JVM: commit's local branch
         files = [m.relpath for m in messages if m is not None and m.relpath]
-        mdir = os.path.join(self.path, "manifests")
-        # fullmatch, not startswith/endswith: a stray non-versioned
-        # 'v*.json' (say 'version.json') must neither crash the int
-        # parse nor be unlinked by an overwrite.
-        prior = (
-            sorted(
-                f
-                for f in os.listdir(mdir)
-                if _BATCH_MANIFEST_NAME.fullmatch(f)
-            )
-            if os.path.isdir(mdir)
-            else []
-        )  # batch manifests only: a batch overwrite must not count
-        # or unlink streaming batch-NNNNNNNN.json manifests
+        payload = {"files": files}
         if self.overwrite:
-            for f in prior:
-                os.unlink(os.path.join(mdir, f))
-            version = 1
-        else:
-            # max(existing)+1, NOT len(prior)+1: an overwrite that
-            # crashed mid-unlink can leave a gap (v2 present, v1
-            # gone); len-based numbering would then recompute v2 and
-            # _publish would atomically REPLACE the live manifest,
-            # silently dropping its committed files from readers.
-            version = (
-                max(
-                    (
-                        int(_BATCH_MANIFEST_NAME.fullmatch(f).group(1))
-                        for f in prior
-                    ),
-                    default=0,
-                )
-                + 1
-            )
-        _publish(self.path, f"v{version:08d}.json", files)
+            payload["mode"] = "overwrite"
+        mdir = _manifests(self.path)
+        version = commit.commit_next(None, mdir, lambda parent: payload)
+        if self.overwrite:
+            for v in commit.versions(None, mdir):
+                if v < version:
+                    commit.delete(None, commit.manifest_path(mdir, v))
 
     def abort(self, messages):
         _abort(self.path, messages)
@@ -196,7 +155,10 @@ class _StreamWriter(DataSourceStreamArrowWriter):
         files = [m.relpath for m in messages if m is not None and m.relpath]
         # keyed by batch id: a crash-replayed batch REPLACES its own
         # manifest; the superseded files become invisible orphans
-        _publish(self.path, f"batch-{batchId:08d}.json", files)
+        commit.publish(
+            None, _manifests(self.path), batchId, {"files": files},
+            prefix="batch-", replace=True,
+        )
 
     def abort(self, messages, batchId: int):
         _abort(self.path, messages)
@@ -226,16 +188,27 @@ def register_sink(spark) -> None:
     spark.dataSource.register(ManifestOrcSinkDataSource)
 
 
-def read_manifest_orc(spark, path: str):
-    """Committed-files-only reader: union of every manifest's file
-    list. Orphans under ``data/`` (crashed tasks, superseded replay
-    files) are invisible because the data directory is never listed."""
-    mdir = os.path.join(path, "manifests")
+def _live_files(spark, path: str) -> list[str]:
+    """Files of the visible manifests: every streaming ``batch-N``, and
+    the batch versions from the newest overwrite on. Foreign names in
+    ``manifests/`` never match a version and are skipped."""
+    mdir = _manifests(path)
     files: list[str] = []
-    for name in sorted(os.listdir(mdir)):
-        if _MANIFEST_NAME.fullmatch(name):
-            with open(os.path.join(mdir, name)) as fh:
-                files.extend(json.load(fh)["files"])
+    for b in commit.versions(spark, mdir, prefix="batch-"):
+        files += commit.read_manifest(spark, mdir, b, prefix="batch-")["files"]
+    for v in reversed(commit.versions(spark, mdir)):
+        m = commit.read_manifest(spark, mdir, v)
+        files += m["files"]
+        if m.get("mode") == "overwrite":
+            break
+    return files
+
+
+def read_manifest_orc(spark, path: str):
+    """Committed-files-only reader (see :func:`_live_files`). Orphans
+    under ``data/`` (crashed tasks, superseded replay files) are
+    invisible because the data directory is never listed."""
+    files = _live_files(spark, path)
     if not files:
         raise ValueError(f"no committed files under {path}")
     return spark.read.orc([os.path.join(path, f) for f in files])
@@ -243,14 +216,14 @@ def read_manifest_orc(spark, path: str):
 
 def vacuum_manifest_orc(path: str, grace_seconds: float = 600.0) -> dict:
     """GC for the sink's documented failure contract: delete every
-    ``data/`` file no manifest references — crashed tasks that never
-    reached ``abort``, and files superseded when a crash-replayed
-    micro-batch rewrote its manifest. Mirrors ``snapshot_expire``'s
-    crash-safe ordering trivially: manifests are never touched, so a
-    crash mid-vacuum just leaves fewer orphans for the next run. At
-    100 TB this is the same metadata-only driver job every
-    manifest-committed table format schedules (Iceberg
-    ``remove_orphan_files``). Returns counts.
+    ``data/`` file no visible manifest references — crashed tasks that
+    never reached ``abort``, files superseded when a crash-replayed
+    micro-batch rewrote its manifest, and files only an overwritten
+    version named. Mirrors ``snapshot_expire``'s crash-safe ordering
+    trivially: manifests are never touched, so a crash mid-vacuum just
+    leaves fewer orphans for the next run. At 100 TB this is the same
+    metadata-only driver job every manifest-committed table format
+    schedules (Iceberg ``remove_orphan_files``). Returns counts.
 
     Concurrency contract: an IN-FLIGHT write has task files on disk
     before its manifest is published; an unguarded vacuum would
@@ -261,31 +234,19 @@ def vacuum_manifest_orc(path: str, grace_seconds: float = 600.0) -> dict:
     writers whose task-attempt lifetime is under the grace period.
     Pass ``grace_seconds=0`` only when the caller holds the same
     single-writer exclusivity ``compact_index`` requires."""
-    mdir = os.path.join(path, "manifests")
-    live: set[str] = set()
-    if os.path.isdir(mdir):
-        for name in os.listdir(mdir):
-            if _MANIFEST_NAME.fullmatch(name):
-                with open(os.path.join(mdir, name)) as fh:
-                    live.update(json.load(fh)["files"])
+    live = set(_live_files(None, path))
     deleted = 0
     skipped_young = 0
     now = time.time()
-    data_dir = os.path.join(path, "data")
-    if os.path.isdir(data_dir):
-        for f in os.listdir(data_dir):
-            rel = os.path.join("data", f)
-            if f.endswith(".orc") and rel not in live:
-                full = os.path.join(path, rel)
-                try:
-                    age = now - os.path.getmtime(full)
-                except OSError:
-                    continue  # racing abort/unlink already removed it
-                if age < grace_seconds:
-                    skipped_young += 1
-                    continue
-                os.unlink(full)
-                deleted += 1
+    for rel, mtime in commit.list_files(None, os.path.join(path, "data")):
+        rel = f"data/{rel}"
+        if not rel.endswith(".orc") or rel in live:
+            continue
+        if now - mtime < grace_seconds:
+            skipped_young += 1
+            continue
+        commit.delete(None, os.path.join(path, rel))
+        deleted += 1
     return {
         "files_deleted": deleted,
         "files_retained": len(live),

@@ -680,6 +680,21 @@ def fold_retract_state(
     return {"log_rows_folded": n_log, "buckets_rewritten": len(kps)}
 
 
+def _read_committed_log(spark: SparkSession, log_dir: str) -> DataFrame:
+    """The committed ``batch_id=*`` partitions of a delta log, without
+    the partition column. Listing them by name keeps a writer's
+    in-flight ``.spark-staging-*`` dir out of the read, which a reader
+    may otherwise list mid-commit (its files vanish under the scan)."""
+    parts = [
+        os.path.join(log_dir, n)
+        for n in _hfs_list_names(spark, log_dir)
+        if n.startswith("batch_id=")
+    ]
+    return (
+        spark.read.option("basePath", log_dir).orc(parts).drop("batch_id")
+    )
+
+
 def read_retract_state(
     spark: SparkSession, state_path: str
 ) -> DataFrame:
@@ -696,7 +711,7 @@ def read_retract_state(
     order_desc = [
         F.col(c).desc() for c in layout.get("oc", "seq").split(",")
     ]
-    rows = spark.read.orc(log_dir).drop("batch_id")
+    rows = _read_committed_log(spark, log_dir)
     if _orc_files_exist(spark, base_dir):
         rows = rows.unionByName(spark.read.orc(base_dir))
     return _latest_per_key(rows, [key_col], order_desc)
@@ -712,7 +727,7 @@ def read_retract_pk_state(
     log_dir = os.path.join(state_path, "pk_log")
     if not _orc_files_exist(spark, log_dir):
         return spark.read.orc(base_dir)
-    rows = spark.read.orc(log_dir).drop("batch_id")
+    rows = _read_committed_log(spark, log_dir)
     if _orc_files_exist(spark, base_dir):
         rows = rows.unionByName(spark.read.orc(base_dir))
     return _latest_per_key(rows, ["side", "pk"], _rj_order())
