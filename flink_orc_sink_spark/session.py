@@ -8,6 +8,24 @@ cluster), Arrow for the Pandas-UDF edges, native vectorized ORC, and UTC
 session time so timestamp semantics are stable across engines (the
 reference instead subtracts 8h for display, ``RowOrcBucketingSink.java:196-198``
 — we report UTC, SURVEY.md §2.3 T4).
+
+Local filesystem: the pyspark wheel ships no ``libhadoop``, so Hadoop's
+local filesystem forks a process for each operation — ``chmod`` per file
+(and its ``.crc``) created and per directory made, ``ls -ld`` per
+permission read, ``readlink`` per link status. Every stream trigger
+writes four checkpoint logs and its ORC part files that way. When
+:func:`get_spark` launches the JVM itself with a ``local[...]`` master
+(driver and executor in one JVM), it puts ``localfs/localfs.jar`` on the
+driver class path and points ``fs.file.impl`` and
+``fs.AbstractFileSystem.file.impl`` at its classes, which do the same
+work through ``java.nio`` with the same ``.crc`` sidecars, modes, owner
+and group (sources in ``localfs/``, built by
+``tools/build_localfs_jar.py``). To keep Hadoop's own classes, pass
+``extra_conf={"spark.hadoop.fs.file.impl":
+"org.apache.hadoop.fs.LocalFileSystem",
+"spark.hadoop.fs.AbstractFileSystem.file.impl":
+"org.apache.hadoop.fs.local.LocalFs"}``; a caller's
+``spark.driver.extraClassPath`` is extended, not replaced.
 """
 
 from __future__ import annotations
@@ -15,7 +33,14 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "localfs", "localfs.jar")
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "flinkorcsink.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "flinkorcsink.localfs.NioLocalFs",
+}
 
 
 def get_spark(
@@ -90,11 +115,33 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in _with_localfs(master, extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _with_localfs(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the fork-free local filesystem (module docstring),
+    when this call launches the JVM with a ``local[...]`` master. A
+    running JVM cannot gain the jar, and a cluster's executors would not
+    have it, so both keep ``conf`` as it is. The caller's own keys win,
+    except ``spark.driver.extraClassPath``, which gains the jar."""
+    if (
+        SparkContext._gateway is not None
+        or os.environ.get("PYSPARK_GATEWAY_PORT")
+        or not re.fullmatch(r"local(\[[^\]]*\])?", master)
+    ):
+        return conf
+    path = conf.get("spark.driver.extraClassPath")
+    return {
+        **LOCALFS_CONF,
+        **conf,
+        "spark.driver.extraClassPath": os.pathsep.join(
+            p for p in (path, LOCALFS_JAR) if p
+        ),
+    }
 
 
 # --- Hadoop-FS helpers (shared by streaming sinks + index retention) --

@@ -20,8 +20,11 @@ from flink_orc_sink_spark.streaming import (
     stream_write_orc,
 )
 
-# slow tier: 35 crash/replay/convergence integration tests, ~520 s alone — excluded from the default (driver) gate, see pytest.ini
-pytestmark = pytest.mark.slow
+# Slowness is marked per test (pytest.ini's `slow` tier is excluded from
+# the default gate). The file's crash/replay/convergence integration tests
+# take ~520 s together; the gate keeps the headline exactly-once restart
+# test and the foreachBatch replay test (~9 s together at local[4]).
+slow = pytest.mark.slow
 
 
 def _write_input(spark, path: str, ids: range) -> None:
@@ -64,6 +67,7 @@ def test_exactly_once_across_restart(spark, tmp_path):
     assert read_committed_orc(spark, out).count() == 250
 
 
+@slow
 def test_partitioned_streaming_sink(spark, tmp_path):
     """Bucketer parity: partition column routes rows to k=v dirs
     (RowOrcBucketingSink.java:41,111) under streaming commit."""
@@ -83,6 +87,7 @@ def test_partitioned_streaming_sink(spark, tmp_path):
     assert back.filter(F.col("user") == "u1").count() == 10
 
 
+@slow
 def test_watermark_tracking(spark, tmp_path):
     """T4/T6 parity: withWatermark + windowed agg; the listener
     observes the event-time watermark advancing (UTC, no −8h hack —
@@ -120,6 +125,7 @@ def test_watermark_tracking(spark, tmp_path):
         spark.streams.removeListener(tracker)
 
 
+@slow
 def test_csv_parse_demo_parity(spark):
     """P1: the reference demo's map (OrcSinkTest.java:32-37)."""
     lines = spark.createDataFrame([("1,2",), ("3,4",), ("bad",)], "value string")
@@ -175,6 +181,7 @@ def test_foreachbatch_sink_idempotent_replay(spark, tmp_path):
     assert spark.read.orc(out).count() == 100  # overwrote, not appended
 
 
+@slow
 def test_stream_cdc_apply_incremental_and_restart(spark, tmp_path):
     """Streaming CDC merge: (1) batches compose incrementally —
     feeding changes in two phases converges to latest-per-key over the
@@ -270,6 +277,7 @@ def test_stream_cdc_apply_incremental_and_restart(spark, tmp_path):
     assert live() == {(1, 2, 11), (2, 3, 22), (3, 1, 30), (4, 1, 40)}
 
 
+@slow
 def test_stream_cdc_apply_no_storage_leak(spark, tmp_path):
     """The CDC sink localCheckpoints every micro-batch; without the
     paired unpersist each trigger leaks one executor-storage block —
@@ -329,6 +337,7 @@ def test_stream_cdc_apply_no_storage_leak(spark, tmp_path):
     assert rows == {(k, 200 + k) for k in range(5)}
 
 
+@slow
 def test_backfill_to_live_handoff_exactly_once(spark, tmp_path):
     """The reference's replay story (README.md:19-22: rebuild state,
     rewind Kafka offsets) as the Spark-native BACKFILL → LIVE handoff:
@@ -397,6 +406,7 @@ def test_backfill_to_live_handoff_exactly_once(spark, tmp_path):
     assert got.filter(F.col("v") != F.col("id") * 10).count() == 0
 
 
+@slow
 def test_socket_demo_pipeline_end_to_end(spark, tmp_path):
     """The reference demo VERBATIM (OrcSinkTest.java:16-40): a live
     TCP socket text source → CSV parse → exactly-once ORC sink —
@@ -447,6 +457,7 @@ def test_socket_demo_pipeline_end_to_end(spark, tmp_path):
     assert sorted((r.x, r.y) for r in got) == sent
 
 
+@slow
 def test_stream_quarantine_splits_and_replays(spark, tmp_path):
     """Streaming DLQ: every input row lands on exactly one side
     (NULL-expectation rows quarantine), and both sides are batch-id
@@ -488,6 +499,7 @@ def test_stream_quarantine_splits_and_replays(spark, tmp_path):
     )
 
 
+@slow
 def test_stream_fanout_atomic_across_tables(spark, tmp_path):
     """Multi-table fan-out commit protocol: (1) a committed batch is
     visible in BOTH tables; (2) a torn batch — one table written, no
@@ -579,6 +591,7 @@ def test_stream_fanout_atomic_across_tables(spark, tmp_path):
     assert read_committed_fanout(spark, raw, commits).count() == 250
 
 
+@slow
 def test_stream_scd2_late_row_splits_interval(spark, tmp_path):
     """SCD2 maintenance must absorb OUT-OF-ORDER arrival: a late
     change landing between two existing versions splits the chain,
@@ -652,6 +665,7 @@ def test_stream_scd2_late_row_splits_interval(spark, tmp_path):
     assert history() == want
 
 
+@slow
 def test_stream_retract_agg_moves_deletes_replay(spark, tmp_path):
     """Retraction aggregation: an update MOVES a key's contribution
     between groups (negative delta out, positive in), a tombstone
@@ -738,6 +752,7 @@ def test_stream_retract_agg_moves_deletes_replay(spark, tmp_path):
     assert agg() == want
 
 
+@slow
 def test_stream_retract_join_moves_deletes_replay(spark, tmp_path):
     """Retraction JOIN (incremental view maintenance): a left pk
     MOVING to a new join key retracts its view rows under the old
@@ -856,6 +871,7 @@ def test_stream_retract_join_moves_deletes_replay(spark, tmp_path):
     assert view() == want
 
 
+@slow
 def test_stream_retract_join_agg_deltas_replay(spark, tmp_path):
     """The maintained aggregate over the retraction join: summed
     per-batch deltas equal the aggregate of the materialized view
@@ -971,6 +987,7 @@ def test_stream_retract_join_agg_deltas_replay(spark, tmp_path):
     assert agg() == want
 
 
+@slow
 def test_stream_retract_join_left_null_extension_flips(spark, tmp_path):
     """Outer-join IVM: an order with no live customer shows up
     null-extended; the customer ARRIVING retracts the null-extended
@@ -1053,6 +1070,7 @@ def test_stream_retract_join_left_null_extension_flips(spark, tmp_path):
     assert agg() == {(None, 10, 1)}
 
 
+@slow
 def test_dedup_ttl_state_bounded(spark, tmp_path):
     """dropDuplicatesWithinWatermark state must EVICT expired keys:
     after draining three time-ordered files spanning hours with a
@@ -1117,6 +1135,7 @@ def test_dedup_ttl_state_bounded(spark, tmp_path):
     assert ttl_state <= 2 * n_per  # expired windows evicted
 
 
+@slow
 def test_stream_retract_join_tombstone_first_batch(spark, tmp_path):
     """A fresh state whose FIRST micro-batch is pure tombstones (a
     legitimate CDC shape) must not crash on schema inference over
@@ -1182,6 +1201,7 @@ def test_stream_retract_join_tombstone_first_batch(spark, tmp_path):
     assert rows == {(10, "s")}
 
 
+@slow
 def test_orc_probe_uri_schemes_and_depths(spark, tmp_path):
     """session.orc_data_files_exist: bounded-depth globs find data at
     layouts 0-2 levels deep, the recursive fallback still covers
@@ -1230,6 +1250,7 @@ def test_orc_probe_uri_schemes_and_depths(spark, tmp_path):
     assert not fs_exists(spark, uri)
 
 
+@slow
 def test_stream_retract_agg_file_scheme_state_path(spark, tmp_path):
     """stream_retract_agg_orc with a ``file:``-schemed state_path: the
     replay markers and state probes must resolve through the Hadoop
@@ -1308,6 +1329,7 @@ def test_stream_retract_agg_file_scheme_state_path(spark, tmp_path):
     assert agg() == want
 
 
+@slow
 def test_stream_retract_agg_tombstone_cleanup(spark, tmp_path):
     """cleanup_retract_state: the horizon-bounded state-TTL pass the
     retention contract promises. After deletes, the key state carries
@@ -1419,6 +1441,7 @@ def test_stream_retract_agg_tombstone_cleanup(spark, tmp_path):
     assert state_rows() == 4
 
 
+@slow
 def test_stream_retract_join_tombstone_cleanup(spark, tmp_path):
     """cleanup_retract_join_state: the pk layer's D tombstones expire
     below the horizon (state shrinks to live rows + newer tombstones)
@@ -1528,6 +1551,7 @@ def test_stream_retract_join_tombstone_cleanup(spark, tmp_path):
     }
 
 
+@slow
 def test_orc_probe_glob_metachar_path(spark, tmp_path):
     """A state path containing glob metacharacters must probe
     correctly: the glob arm is skipped (an unclosed bracket would
@@ -1543,6 +1567,7 @@ def test_orc_probe_glob_metachar_path(spark, tmp_path):
     assert orc_data_files_exist(spark, str(tmp_path / "state[2024]"))
 
 
+@slow
 def test_stream_retract_agg_random_feed_converges(spark, tmp_path):
     """Randomized (seeded) end-to-end convergence: a shuffled CDC
     feed with group moves, deletes and out-of-order seqs, split
@@ -1638,6 +1663,7 @@ def test_stream_retract_agg_random_feed_converges(spark, tmp_path):
     assert agg() == want
 
 
+@slow
 def test_stream_retract_join_random_feed_converges(spark, tmp_path):
     """Randomized (seeded) IVM convergence for the retraction JOIN:
     shuffled two-sided CDC (join-key moves, deletes, out-of-order
@@ -1748,6 +1774,7 @@ def test_stream_retract_join_random_feed_converges(spark, tmp_path):
     assert view() == want
 
 
+@slow
 def test_retract_agg_cleanup_cadence_long_replay(spark, tmp_path):
     """cleanup_every_n_batches + horizon_fn: the sink runs the
     state-TTL pass on its OWN cadence, under the same per-batch
@@ -1847,6 +1874,7 @@ def test_retract_agg_cleanup_cadence_long_replay(spark, tmp_path):
         assert not os.path.exists(os.path.join(state, "_lease")), cycle
 
 
+@slow
 def test_retract_join_cleanup_cadence(spark, tmp_path):
     """The JOIN sink's cleanup cadence (cleanup_every_n_batches +
     horizon_fn under the batch's lease): the pk-layer tombstone is
@@ -1940,6 +1968,7 @@ def test_retract_join_cleanup_cadence(spark, tmp_path):
     assert not os.path.exists(os.path.join(state, "_lease"))
 
 
+@slow
 def test_retract_agg_fold_preserves_resolution(spark, tmp_path):
     """LSM fold (round 9): folding the delta log into the base must
     change NOTHING observable — resolved state, aggregate readback —
@@ -2037,6 +2066,7 @@ def test_retract_agg_fold_preserves_resolution(spark, tmp_path):
     assert scenario("manual", False) == scenario("auto", True)
 
 
+@slow
 def test_retract_join_fold_preserves_view_and_agg(spark, tmp_path):
     """Join-sink fold: jk layer + materialized view are brought up to
     the log, the pk base is folded, the log dropped — and the MOR
@@ -2139,6 +2169,7 @@ def test_retract_join_fold_preserves_view_and_agg(spark, tmp_path):
     assert scenario("manual", False) == scenario("auto", True)
 
 
+@slow
 def test_stream_retract_join_agg_late_row_other_bucket_after_fold(
     spark, tmp_path
 ):
@@ -2240,6 +2271,7 @@ def test_stream_retract_join_agg_late_row_other_bucket_after_fold(
     assert agg() == view_agg()
 
 
+@slow
 def test_retract_layout_conflict_refused(spark, tmp_path):
     """Restarting a retract sink with different layout parameters
     against existing state must fail loudly (the params decide how
@@ -2290,6 +2322,7 @@ def test_retract_layout_conflict_refused(spark, tmp_path):
     assert exc is not None and "layout conflict" in str(exc)
 
 
+@slow
 def test_cdc_pre_r9_layout_refused(spark, tmp_path):
     """A CDC state dir in the pre-round-9 layout (kp=* partitions at
     the state root) must be refused loudly, not silently ignored —
@@ -2324,6 +2357,7 @@ def test_cdc_pre_r9_layout_refused(spark, tmp_path):
     assert exc is not None and "pre-round-9" in str(exc)
 
 
+@slow
 def test_fold_retract_join_crash_prefixes_converge(spark, tmp_path):
     """The fold's write order (jk -> view -> pk base -> log delete) IS
     its crash contract: after ANY prefix of the writes, the
@@ -2455,6 +2489,7 @@ def test_fold_retract_join_crash_prefixes_converge(spark, tmp_path):
     assert view() == want
 
 
+@slow
 def test_fold_scd2_crash_prefixes_converge(spark, tmp_path):
     """Same contract for the SCD2 fold (changes -> history -> log
     delete): every crash prefix leaves the merge-on-read history
@@ -2555,6 +2590,7 @@ def test_fold_scd2_crash_prefixes_converge(spark, tmp_path):
     assert hist() == want
 
 
+@slow
 def test_fold_retract_state_crash_before_log_delete_converges(
     spark, tmp_path
 ):
